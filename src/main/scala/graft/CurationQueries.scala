@@ -448,8 +448,7 @@ object CurationQueries {
       // internal dedup exchange re-ran distinct-of-distinct per call
       // (its cache is released when pageRank returns, so every bench
       // run re-paid it — measured 3.2 -> 2.0 s interleaved-min at
-      // sf0.1). ckptEvery stays 1: the sparse-checkpoint variant
-      // measured neutral here (2.04 vs 1.96 s)
+      // sf0.1)
       Graph.pageRank(edges, iterations = 3, edgesDistinct = true)
         .select(col("node"), round(col("rank"), 6).as("rank"))
         .orderBy("node")

@@ -16,8 +16,8 @@ import graft.ops._
 object SparkEntry {
 
   // Base-table DataFrames are memoized per (session, dir, table) ONLY
-  // when the harness opts in via spark.graft.cacheTables (Verify/Bench/
-  // Explain do): a DataFrame is an immutable logical plan, so reuse is
+  // when the harness opts in via spark.graft.cacheTables (GraftSession
+  // does): a DataFrame is an immutable logical plan, so reuse is
   // safe there, and it skips re-listing files + re-reading parquet
   // footers on every one of the 60+ registered queries. The library
   // default stays uncached — a long-lived process would otherwise be

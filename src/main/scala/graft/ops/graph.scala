@@ -34,11 +34,9 @@ object Graph {
     */
   def pageRank(edges0: DataFrame, iterations: Int,
                damping: Double = 0.85,
-               edgesDistinct: Boolean = false,
-               ckptEvery: Int = 1): DataFrame = {
+               edgesDistinct: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 10,
       s"iterations must be in [1,10], got $iterations")
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
     // the distinct edge set feeds nodes (twice, via the union) and
     // contribEdges (twice, via the out-degree self-join): pin it so
     // the caller's edge-derivation pipeline runs ONCE, not once per
@@ -72,15 +70,11 @@ object Graph {
       .cache()
     var ranks = nodes
       .select(col("node"), lit(1.0 / nDouble).as("rank"))
-    // checkpoint every `ckptEvery` iterations (and always the last, so
-    // the helper unpersists below can't strand the returned frame's
-    // lineage): the recurrence grows LINEARLY when left lazy (ranks_t
-    // appears once in ranks_{t+1}'s plan), so small iteration counts
-    // run as one job over the pinned edge tables instead of paying a
-    // driver barrier + rank materialization per iteration; high
-    // iteration counts keep ckptEvery = 1 (constant-size plans).
-    // Only a MATERIALIZED checkpoint is ever released — releasing a
-    // lazy one a later plan depends on would lose its blocks.
+    // checkpoint every iteration (constant-size plans; the last one
+    // also keeps the helper unpersists below from stranding the
+    // returned frame's lineage). Only a MATERIALIZED checkpoint is
+    // ever released — releasing a lazy one a later plan depends on
+    // would lose its blocks.
     var pinned: Option[DataFrame] = None
     for (i <- 1 to iterations) {
       val contrib = contribEdges
@@ -91,14 +85,12 @@ object Graph {
         .select(col("node"),
           (lit((1.0 - damping) / nDouble) +
             lit(damping) * coalesce(col("__c"), lit(0.0))).as("rank"))
-      if (i == iterations || i % ckptEvery == 0) {
-        ranks = ranks.localCheckpoint()
-        // the prior snapshot's blocks are dead once this one is
-        // materialized — release them so a long-lived session doesn't
-        // accumulate one rank snapshot per iteration per call
-        pinned.foreach(Scale.releaseLocalCheckpoint)
-        pinned = Some(ranks)
-      }
+      ranks = ranks.localCheckpoint()
+      // the prior snapshot's blocks are dead once this one is
+      // materialized — release them so a long-lived session doesn't
+      // accumulate one rank snapshot per iteration per call
+      pinned.foreach(Scale.releaseLocalCheckpoint)
+      pinned = Some(ranks)
     }
     // the returned ranks frame is already materialized; the pinned
     // helper tables only served the iterations

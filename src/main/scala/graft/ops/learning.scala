@@ -108,17 +108,14 @@ object Learning {
     * step the array version's, and q162 is oracle-checked through this
     * path.
     *
-    * Every `ckptEvery` iterations the weights are EAGERLY
-    * localCheckpoint-ed (and only then is the prior pinned frame
-    * released — releasing an unmaterialized checkpoint a later plan
-    * depends on would lose its blocks). Default 1: each iteration is a
-    * small plan over materialized leaves, which measures faster than
-    * letting Catalyst re-optimize an iters-deep nested plan (the
-    * ckptEvery > 1 setting trades job-launch overhead against plan
-    * growth for very high iteration counts). */
+    * Every iteration the weights are EAGERLY localCheckpoint-ed (and
+    * only then is the prior pinned frame released — releasing an
+    * unmaterialized checkpoint a later plan depends on would lose its
+    * blocks): each iteration is a small plan over materialized leaves,
+    * which measures faster than letting Catalyst re-optimize an
+    * iters-deep nested plan. */
   def trainLinearDist(features: DataFrame, labels: DataFrame,
-                      buckets: Int, lr: Double, iters: Int,
-                      ckptEvery: Int = 1): DataFrame = {
+                      buckets: Int, lr: Double, iters: Int): DataFrame = {
     val spark = features.sparkSession
     // cache UNDER the eager checkpoint: the checkpoint's leaf blocks
     // are per-invocation, but the cached feature pipeline is what an
@@ -157,16 +154,13 @@ object Learning {
       w = w.join(grad, Seq("bucket"), "left")
         .select(col("bucket"),
           (col("w") + lit(lr) * coalesce(col("__g"), lit(0.0))).as("w"))
-      val last = i == iters - 1
-      if (last || (i + 1) % ckptEvery == 0) {
-        w = w.localCheckpoint() // eager: materialized before releases
-        pinned.foreach(Scale.releaseLocalCheckpoint)
-        pinned = if (last) None else Some(w)
-      }
+      w = w.localCheckpoint() // eager: materialized before releases
+      pinned.foreach(Scale.releaseLocalCheckpoint)
+      pinned = if (i == iters - 1) None else Some(w)
     }
     Scale.releaseLocalCheckpoint(feats)
-    // the final weights are materialized (the loop always checkpoints
-    // the last iteration), so the label pin has no remaining consumer
+    // the final weights are materialized (the loop checkpoints every
+    // iteration), so the label pin has no remaining consumer
     labs.unpersist()
     w
   }

@@ -1,7 +1,5 @@
 package graft.pipelines
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end pipeline runner: executes all eight reference-shaped ETL
   * jobs over a directory of extracted CSVs and writes the warehouse
   * (append-history + replace-latest parquet tables), reproducing one
@@ -16,14 +14,7 @@ object RunAll {
     require(args.length >= 3,
       "usage: runMain graft.pipelines.RunAll <inputDir> <warehouseDir> <runDate>")
     val Array(inputDir, outDir, runDate) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     val alerts = scala.collection.mutable.ListBuffer.empty[String]
     val alert: Pipelines.Alert = m => { alerts += m; System.err.println(s"[alert] $m") }

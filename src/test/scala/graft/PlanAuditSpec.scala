@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Suite-wide physical-plan guards: every registered query is planned
@@ -71,6 +75,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(stale.isEmpty,
       "stale allowlist entries (query no longer plans a global " +
         s"window — remove them): ${stale.mkString(", ")}")
+  }
+
+  test("no file under src/main/scala but GraftSession builds a SparkSession") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val files = Files.walk(root)
+    val builders = try files.iterator().asScala.filter { p =>
+      p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala" &&
+        Files.readString(p).contains("SparkSession.builder")
+    }.map(root.relativize(_).toString).toList.sorted
+    finally files.close()
+    assert(builders.isEmpty, "build the session with GraftSession.local(): " +
+      builders.mkString(", "))
   }
 
   test("filters and projections reach the parquet scan") {
