@@ -348,8 +348,8 @@ object ScaleProbe {
       // payload + stats through the ingest's own tail, so the sweeps
       // pin stats deltas and the repair pair below can be booked
       var t0i = System.nanoTime()
-      graft.streaming.Streaming.ingestTail(corpus, "text", tmpR, 0L,
-        0.0, 5000.0)
+      graft.streaming.Streaming.ingestTail(corpus, () => (), "text", tmpR,
+        0L, 0.0, 5000.0)
       println(f"[probe] ingest tail (payload+stats)   $total%10d docs " +
         f"${(System.nanoTime() - t0i) / 1e9}%7.1f s")
       graft.streaming.Streaming.mergeBenchmarkNgramBatch(
@@ -380,7 +380,7 @@ object ScaleProbe {
         corpus.where(pmod(col("doc_id"), lit(8)) === 0)
           .select((col("doc_id") + lit((maxId + 1) * replicas * 3))
             .as("doc_id"), col("text")),
-        "text", tmpR, 1L, 0.0, 5000.0)
+        () => (), "text", tmpR, 1L, 0.0, 5000.0)
       // residue 37 lands in replica cliques the first two benchmarks
       // did NOT touch (cliques are 20 consecutive ids, so residues
       // 0/1 share cliques; 37 hits a disjoint fifth) — the sweep

@@ -1275,14 +1275,14 @@ object Dedup {
     * Exchange on the index subtree; StreamingSpec asserts this on the
     * physical plan). Existence semantics throughout: a boilerplate
     * bucket with millions of store rows collapses map-side to one
-    * surviving band key, never a pair expansion. The in-batch pass
-    * joins the batch's own band rows the same way. */
+    * surviving band key, never a pair expansion. The in-batch pass is
+    * one min-id window over the batch's own band rows. */
   def admitAgainstIndex(batch: DataFrame, textCol: String, idCol: String,
                         index: DataFrame, numHashes: Int = 8,
                         bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    // checkpointed: the banded signatures feed three joins below plus
-    // the final semi-join — without materialization each branch would
-    // re-run the dominant row-local shingle hashing over the batch
+    // checkpointed: the banded signatures feed both the store probe
+    // and the hit-marking join — without materialization each branch
+    // would re-run the dominant row-local shingle hashing over the batch
     val probe = minhashIndex(Scale.widen(batch), textCol, idCol,
       numHashes, bands, shingleSize).localCheckpoint()
     admitProbed(batch, idCol, probe, index)
@@ -1297,36 +1297,33 @@ object Dedup {
                                  index: DataFrame): DataFrame = {
     // a doc is suppressed if ANY of its bands hits the store. Join
     // order is chosen so the corpus-scale index is the STREAMED side
-    // of a broadcast join: broadcast the batch's distinct band keys,
-    // semi-join the index against them (output ≤ matching index rows,
-    // collapsed map-side by the distinct), then mark the batch docs
-    // whose bands survived. No Exchange ever touches the index.
-    val probeKeys = probe.select("band_idx", "band_hash").distinct()
+    // of a broadcast join: broadcast the batch's band keys, semi-join
+    // the index against them (output ≤ matching index rows, collapsed
+    // map-side by the distinct), then mark the batch's band rows
+    // against the surviving keys with a broadcast left join. No
+    // Exchange ever touches the index.
+    val keys = Seq(col("band_idx"), col("band_hash"))
     val hitKeys = index
-      .join(broadcast(probeKeys), Seq("band_idx", "band_hash"), "left_semi")
-      .select("band_idx", "band_hash").distinct()
-    val hitByStore = probe
-      .join(broadcast(hitKeys), Seq("band_idx", "band_hash"), "left_semi")
-      .select(col("id")).distinct()
-    // in-batch: drop docs sharing a band bucket with a lower-id batch
-    // doc. Explicit aliases on both sides — resolving via dataset-id
-    // disambiguation on a self-joined checkpoint is one refactor away
-    // from a trivially-true predicate.
-    val later = probe.select(col("band_idx").as("bi_a"),
-      col("band_hash").as("bh_a"), col("id").as("id_a"))
-    val earlier = probe.select(col("band_idx").as("bi_b"),
-      col("band_hash").as("bh_b"), col("id").as("id_b"))
-    val dupInBatch = later.join(earlier,
-        col("bi_a") === col("bi_b") && col("bh_a") === col("bh_b") &&
-          col("id_a") > col("id_b"))
-      .select(col("id_a").as("id")).distinct()
+      .join(broadcast(probe.select(keys: _*)), Seq("band_idx", "band_hash"),
+        "left_semi")
+      .select(keys: _*).distinct()
+      .withColumn("__hit", lit(true))
+    // in-batch: a doc sharing a band bucket with a lower-id batch doc
+    // is a later copy — its id exceeds the bucket's minimum id. One
+    // window over the batch's band rows, no self-join
+    val suppressed = probe
+      .join(broadcast(hitKeys), Seq("band_idx", "band_hash"), "left")
+      .withColumn("__first", min(col("id")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)))
+      .where(col("__hit").isNotNull || col("id") > col("__first"))
+      .select(col("id").as(idCol))
     // admission is batch MINUS suppressed (not probe minus suppressed):
     // a NULL-text doc has no band rows at all — its minhash is
     // undefined, it collides with nothing, and it is ADMITTED,
-    // matching the SQL semantics where its NULL band_hash never joins
-    val suppressed = hitByStore.unionByName(dupInBatch).distinct()
-      .withColumnRenamed("id", idCol)
-    batch.join(suppressed, Seq(idCol), "left_anti")
+    // matching the SQL semantics where its NULL band_hash never joins.
+    // The suppressed ids (≤ the batch's band rows) are broadcast, so
+    // the batch's payload columns never shuffle
+    batch.join(broadcast(suppressed), Seq(idCol), "left_anti")
   }
 
   /** Bottom-k sketch of the distinct-token set per key: the k smallest

@@ -428,7 +428,9 @@ object Streaming {
           "original checkpoint, or a new store directory.")
       return // checkpoint replay of a merged batch
     }
-    deltas.foreach { case (part, delta) =>
+    // the parts write disjoint tmp subdirs, so they fold concurrently;
+    // the swap below waits for all of them
+    ForkJoin.all(deltas.map { case (part, delta) => () =>
       // a part's merge is additive (mergeAggDelta) unless the caller
       // supplies a custom fold — e.g. the Holt store's state carry,
       // which must run even when no prior exists (its delta is raw
@@ -446,7 +448,7 @@ object Streaming {
         }
       }
       merged.write.parquet(s"$tmp/${part.name}")
-    }
+    }: _*)
     // carry top-level marker files OTHER maintainers own (e.g. the
     // stats repair's _sweep_subtracted) across the swap — the merge
     // rebuilds only its own parts and _batch, and dropping a foreign
@@ -651,7 +653,17 @@ object Streaming {
         ()
       }
 
+  /** Under the registry's lease: a sweep ([[retroDecontaminate]])
+    * reads the registry across many jobs and holds the same lease, so
+    * a registration never swaps the store out from under its scan. */
   private[graft] def mergeBenchmarkNgramBatch(batch: DataFrame,
+      textCol: String, statsDir: String, batchId: Long,
+      n: Int): Unit =
+    withStoreLock(batch.sparkSession, Seq(statsDir)) {
+      mergeBenchmarkNgramBody(batch, textCol, statsDir, batchId, n)
+    }
+
+  private def mergeBenchmarkNgramBody(batch: DataFrame,
       textCol: String, statsDir: String, batchId: Long,
       n: Int): Unit =
     mergeStoreBatch(statsDir, batchId, Seq(
@@ -875,13 +887,20 @@ object Streaming {
       numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3): DataFrame =
     withStoreLock(batch.sparkSession, Seq(indexDir)) {
       healCompactRoot(batch.sparkSession, indexDir)
-      mergeDedupIndexBody(batch, textCol, idCol, indexDir, batchId,
-        numHashes, bands, shingleSize)
+      val (admitted, writeIndex) = admitDedupIndex(batch, textCol, idCol,
+        indexDir, batchId, numHashes, bands, shingleSize)
+      writeIndex()
+      admitted
     }
 
-  private def mergeDedupIndexBody(batch: DataFrame, textCol: String,
+  /** The admission decision of one [[dedupIndexSink]] batch (the
+    * admitted subset, materialized) and the effect that appends its
+    * band rows to the index — split so a composite sink can run that
+    * write concurrently with its other effects. */
+  private def admitDedupIndex(batch: DataFrame, textCol: String,
       idCol: String, indexDir: String, batchId: Long,
-      numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
+      numHashes: Int, bands: Int,
+      shingleSize: Int): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
     val dir = new HPath(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -895,36 +914,56 @@ object Streaming {
     // index write
     val probe = graft.ops.Dedup.minhashIndex(batch, textCol, idCol,
       numHashes, bands, shingleSize).localCheckpoint()
+    lazy val empty = graft.ops.Dedup.minhashIndex(batch.limit(0), textCol,
+      idCol, numHashes, bands, shingleSize)
     val standing =
       if (hasPrior) {
-        // partition-pruned read: only the bh= buckets this batch's
-        // band hashes land in are listed/scanned — per-batch read I/O
-        // is O(touched buckets), not O(index), and admitProbed never
-        // shuffles what it reads
+        // partition-pruned read: the touched bh= buckets (one job,
+        // deduplicated per partition) are the only dirs handed to the
+        // reader, each `batch=*/bh=k` leaf as its own root under
+        // basePath — Spark lists just those leaves, in one pass
+        // whatever the index age, instead of recursing into every
+        // batch= dir's 64 children. Scan I/O is O(touched buckets ×
+        // uncompacted batches), and admitProbed never shuffles it
         val touched = probe
-          .select(dedupIndexBucket(col("band_hash")).as("bh"))
-          .distinct().collect().map(_.getInt(0))
-        spark.read.parquet(indexDir)
+          .select(dedupIndexBucket(col("band_hash")))
+          .as[Int](org.apache.spark.sql.Encoders.scalaInt)
+          .mapPartitions(_.toSet.iterator)(
+            org.apache.spark.sql.Encoders.scalaInt)
+          .collect().distinct.sorted
+        val leaves = if (touched.isEmpty) Array.empty[String]
+          else Option(fs.globStatus(new HPath(dir,
+              s"batch=*/bh={${touched.mkString(",")}}")))
+            .getOrElse(Array.empty).map(_.getPath.toString)
+        if (leaves.isEmpty) empty
+        else spark.read.option("basePath", indexDir).parquet(leaves: _*)
           .where(col("bh").isin(touched.toSeq: _*))
           .drop("batch", "bh")
-      } else graft.ops.Dedup.minhashIndex(batch.limit(0), textCol, idCol,
-        numHashes, bands, shingleSize)
+      } else empty
     val admitted = graft.ops.Dedup.admitProbed(batch, idCol, probe, standing)
       .localCheckpoint()
     // guard on the WRITE FRAME itself: a batch whose admitted rows
     // carry no band rows (all-null-text, or only band-less docs
     // admitted) must write NOTHING — a batch= dir holding only
-    // _SUCCESS would make the next batch's standing read fail parquet
+    // _SUCCESS would make a later read of the index root fail parquet
     // schema inference and wedge the stream on every replay (the skip
-    // is deterministic, so a replayed batch skips identically)
+    // is deterministic, so a replayed batch skips identically). The
+    // admitted ids are batch-sized, so they are broadcast and the band
+    // rows never shuffle for the semi-join
     val bandRows = probe.join(
-        admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        broadcast(admitted.select(col(idCol).as("id"))), Seq("id"),
+        "left_semi")
       .withColumn("bh", dedupIndexBucket(col("band_hash")))
-      .localCheckpoint()
-    if (!bandRows.isEmpty)
-      bandRows.write.mode("overwrite").partitionBy("bh")
-        .parquet(s"$indexDir/batch=$batchId")
-    admitted
+    // hash-partitioned on bh: every bucket still lands in one task (one
+    // file per bh= dir), and the buckets spread over all cores instead
+    // of one coalesced task writing them back to back
+    val writeIndex = () =>
+      if (!bandRows.isEmpty)
+        bandRows.repartition(spark.sparkContext.defaultParallelism,
+            col("bh"))
+          .write.mode("overwrite").partitionBy("bh")
+          .parquet(s"$indexDir/batch=$batchId")
+    (admitted, writeIndex)
   }
 
   /** Read a [[dedupIndexSink]] index: every admitted document's band
@@ -983,13 +1022,19 @@ object Streaming {
       dfTable: DataFrame, n: Int, minJaccard: Double): DataFrame =
     withStoreLock(batch.sparkSession, Seq(indexDir)) {
       healCompactRoot(batch.sparkSession, indexDir)
-      mergeJaccardIndexBody(batch, textCol, idCol, indexDir, batchId,
-        dfTable, n, minJaccard)
+      val (admitted, writeTrees) = admitJaccardIndex(batch, textCol,
+        idCol, indexDir, batchId, dfTable, n, minJaccard)
+      writeTrees()
+      admitted
     }
 
-  private def mergeJaccardIndexBody(batch: DataFrame,
+  /** The admission decision of one [[jaccardIndexSink]] batch and the
+    * effect that appends its rows to both trees (the two writes run
+    * concurrently) — split like [[admitDedupIndex]]. */
+  private def admitJaccardIndex(batch: DataFrame,
       textCol: String, idCol: String, indexDir: String, batchId: Long,
-      dfTable: DataFrame, n: Int, minJaccard: Double): DataFrame = {
+      dfTable: DataFrame, n: Int,
+      minJaccard: Double): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
     val dir = new HPath(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1088,15 +1133,16 @@ object Streaming {
       if (bandedLayout) prefRows0.withColumn("szb",
         graft.ops.Dedup.jaccardSizeBand(col("sz")))
       else prefRows0).localCheckpoint()
-    if (!arrRows.isEmpty)
-      arrRows.write.mode("overwrite").partitionBy("ab")
-        .parquet(s"$indexDir/arrays/batch=$batchId")
-    if (!prefRows.isEmpty)
-      prefRows.write.mode("overwrite")
-        .partitionBy((if (bandedLayout) Seq("jb", "szb")
-          else Seq("jb")): _*)
-        .parquet(s"$indexDir/prefix/batch=$batchId")
-    admitted
+    val writeTrees = () => ForkJoin.all(
+      () => if (!arrRows.isEmpty)
+        arrRows.write.mode("overwrite").partitionBy("ab")
+          .parquet(s"$indexDir/arrays/batch=$batchId"),
+      () => if (!prefRows.isEmpty)
+        prefRows.write.mode("overwrite")
+          .partitionBy((if (bandedLayout) Seq("jb", "szb")
+            else Seq("jb")): _*)
+          .parquet(s"$indexDir/prefix/batch=$batchId"))
+    (admitted, writeTrees)
   }
 
   /** The admitted (id, ord, sz) sets of a [[jaccardIndexSink]] (plus
@@ -1166,7 +1212,9 @@ object Streaming {
     * leftovers deleted, rewritten identically against the pre-crash
     * standing state), and the stats merge is guarded by the `_batch`
     * high-water mark — a replayed id rewrites identical files and
-    * skips the already-folded stats, whatever point the crash hit.
+    * skips the already-folded stats, whatever point the crash hit —
+    * so the three writes carry no order, and run concurrently under
+    * the lease ([[ingestTail]]).
     * Per-batch cost: O(batch + touched index buckets + store size);
     * the corpus is never rescanned. */
   def curationIngestSink(docs: DataFrame, textCol: String, idCol: String,
@@ -1392,14 +1440,16 @@ object Streaming {
     val gated = benchmarkDir.fold(qualGated)(bd =>
       deconGatePinned(qualGated, textCol, idCol, rootDir, batchId,
         bd, deconMinHits).localCheckpoint())
-    if (gated.isEmpty) return
+    // without a registry `gated` IS qualGated, already checked above
+    if (benchmarkDir.nonEmpty && gated.isEmpty) return
     withStoreLock(batch.sparkSession,
         Seq(s"$rootDir/index", s"$rootDir/corpus")) {
       healCompactRoot(batch.sparkSession, s"$rootDir/index")
       healCurationCorpusRoot(batch.sparkSession, s"$rootDir/corpus")
-      ingestTail(mergeDedupIndexBody(gated, textCol, idCol,
-          s"$rootDir/index", batchId, numHashes, bands, shingleSize),
-        textCol, rootDir, batchId, lenLo, lenHi)
+      val (admitted, writeIndex) = admitDedupIndex(gated, textCol, idCol,
+        s"$rootDir/index", batchId, numHashes, bands, shingleSize)
+      ingestTail(admitted, writeIndex, textCol, rootDir, batchId,
+        lenLo, lenHi)
     }
   }
 
@@ -1438,14 +1488,18 @@ object Streaming {
       Seq(gated.schema(idCol)))
     if (!fs.exists(new HPath(pin, "_SUCCESS"))) {
       if (fs.exists(pin)) fs.delete(pin, true)
-      val dropped = benchmarkRegistry(spark, benchmarkDir) match {
-        case None => gated.select(col(idCol)).limit(0)
-        case Some((n, grams)) =>
-          graft.ops.Dedup.contaminationAgainstGrams(gated, grams,
-              textCol, idCol, n, minHits)
-            .where(col("contaminated")).select(col(idCol))
+      // the registry's lease: a registration must not swap the grams
+      // out from under the scoring scan
+      withStoreLock(spark, Seq(benchmarkDir)) {
+        val dropped = benchmarkRegistry(spark, benchmarkDir) match {
+          case None => gated.select(col(idCol)).limit(0)
+          case Some((n, grams)) =>
+            graft.ops.Dedup.contaminationAgainstGrams(gated, grams,
+                textCol, idCol, n, minHits)
+              .where(col("contaminated")).select(col(idCol))
+        }
+        dropped.write.mode("overwrite").parquet(pin.toString)
       }
-      dropped.write.mode("overwrite").parquet(pin.toString)
     }
     gated.join(
       broadcast(spark.read.schema(idSchema).parquet(pin.toString)),
@@ -1523,7 +1577,9 @@ object Streaming {
     * against the live corpus rather than pinning. Serializes with
     * ingest/compaction/snapshotting via the corpus lease (the swap
     * discipline alone would let a compaction rename the corpus out
-    * from under a mid-sweep scan). Returns the number of
+    * from under a mid-sweep scan), and with benchmark registrations
+    * via the registry's lease (a registration's swap would pull the
+    * grams out from under it the same way). Returns the number of
     * newly-tombstoned ids.
     *
     * Tombstoned documents deliberately REMAIN in the dedup index: a
@@ -1535,7 +1591,7 @@ object Streaming {
   def retroDecontaminate(spark: SparkSession, rootDir: String,
       textCol: String, idCol: String, benchmarkDir: String,
       minHits: Long = 1L): Long =
-    withStoreLock(spark, Seq(s"$rootDir/corpus")) {
+    withStoreLock(spark, Seq(s"$rootDir/corpus", benchmarkDir)) {
       retroDecontaminateLocked(spark, rootDir, textCol, idCol,
         benchmarkDir, minHits)
     }
@@ -3556,17 +3612,21 @@ object Streaming {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The payload + stats tail every curation-ingest variant shares
-    * (the LSH gate above, the exact-Jaccard gate below): write the
-    * admitted rows under `corpus/batch=<id>/` and fold them into the
-    * standing word-histogram and length-drift stats — stats see
-    * exactly the corpus that survived, whatever gate decided it. */
-  private[graft] def ingestTail(admitted: DataFrame, textCol: String,
-      rootDir: String, batchId: Long, lenLo: Double,
-      lenHi: Double): Unit = {
-    admitted.write.mode("overwrite")
-      .parquet(s"$rootDir/corpus/batch=$batchId")
-    mergeStoreBatch(s"$rootDir/stats", batchId, Seq(
+  /** The effects every curation-ingest variant shares once its gate
+    * (the LSH gate above, the exact-Jaccard gate below) has decided
+    * `admitted`: the gate's own index write, the admitted rows under
+    * `corpus/batch=<id>/`, and their fold into the standing
+    * word-histogram and length-drift stats — stats see exactly the
+    * corpus that survived, whatever gate decided it. The three are
+    * independent (each is replay-safe on its own, see
+    * [[curationIngestSink]]), so they run concurrently under the
+    * caller's lease. */
+  private[graft] def ingestTail(admitted: DataFrame, writeIndex: () => Unit,
+      textCol: String, rootDir: String, batchId: Long, lenLo: Double,
+      lenHi: Double): Unit = ForkJoin.all(writeIndex,
+    () => admitted.write.mode("overwrite")
+      .parquet(s"$rootDir/corpus/batch=$batchId"),
+    () => mergeStoreBatch(s"$rootDir/stats", batchId, Seq(
       StorePart("hist", Seq("word"), Seq("cnt")) ->
         graft.ops.Bpe.wordHistogram(admitted, textCol),
       StorePart("lens", Seq("bucket"), Seq("n")) ->
@@ -3598,8 +3658,7 @@ object Streaming {
         prior.map(p => graft.ops.Warehouse.mergeAggDelta(
             p, delta, Seq("len_lo", "len_hi"), Seq("n_batches")))
           .getOrElse(delta)
-      }))
-  }
+      })))
 
   /** The length-bucket bounds stamped into a curation stats store's
     * `units` part, or None for a store that predates the unit stamp
@@ -3663,14 +3722,16 @@ object Streaming {
     val gated = benchmarkDir.fold(qualGated)(bd =>
       deconGatePinned(qualGated, textCol, idCol, rootDir, batchId,
         bd, deconMinHits).localCheckpoint())
-    if (gated.isEmpty) return
+    // without a registry `gated` IS qualGated, already checked above
+    if (benchmarkDir.nonEmpty && gated.isEmpty) return
     withStoreLock(batch.sparkSession,
         Seq(s"$rootDir/index", s"$rootDir/corpus")) {
       healCompactRoot(batch.sparkSession, s"$rootDir/index")
       healCurationCorpusRoot(batch.sparkSession, s"$rootDir/corpus")
-      ingestTail(mergeJaccardIndexBody(gated, textCol, idCol,
-          s"$rootDir/index", batchId, dfTable, n, minJaccard),
-        textCol, rootDir, batchId, lenLo, lenHi)
+      val (admitted, writeTrees) = admitJaccardIndex(gated, textCol,
+        idCol, s"$rootDir/index", batchId, dfTable, n, minJaccard)
+      ingestTail(admitted, writeTrees, textCol, rootDir, batchId,
+        lenLo, lenHi)
     }
   }
 

@@ -91,6 +91,54 @@ class PlanAuditSpec extends SparkSpec {
       builders.mkString(", "))
   }
 
+  /** `file: count` of thread/future constructs under a source root
+    * beyond what each file is allowed: the fork-join helper owns all
+    * threads that run Spark work; the lease heartbeat and Bench's CPU
+    * sampler are the two threads that run none. Comment lines are
+    * skipped. */
+  private def concurrencyOffenders(root: java.nio.file.Path): List[String] = {
+    val construct = (raw"\bFuture\b|\bExecutionContext\b|new Thread\b|" +
+      raw"\bExecutors\.|ForkJoinPool").r
+    val allowed = Map("streaming/Streaming.scala" -> 1, "Bench.scala" -> 1)
+    val files = Files.walk(root)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> p)
+      .filter(_._1 != "graft/streaming/ForkJoin.scala")
+      .flatMap { case (rel, p) =>
+        val n = Files.readAllLines(p).asScala.count { l =>
+          val t = l.trim
+          !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
+            construct.findFirstIn(l).nonEmpty
+        }
+        val ok = allowed.collectFirst {
+          case (suffix, k) if rel.endsWith(suffix) => k }.getOrElse(0)
+        if (n > ok) Some(s"$rel: $n") else None
+      }.toList.sorted
+    finally files.close()
+  }
+
+  test("no Future, ExecutionContext or raw Thread runs Spark work outside " +
+      "the one fork-join helper") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val offenders = concurrencyOffenders(root)
+    assert(offenders.isEmpty, "fork Spark work through " +
+      s"graft.streaming.ForkJoin: ${offenders.mkString(", ")}")
+    // the lint bites: a copy of the tree with one Future added fails it
+    val mutant = Files.createTempDirectory("graft-lint")
+    val src = Files.walk(root)
+    try src.iterator().asScala.foreach { p =>
+      val to = mutant.resolve(root.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to)
+    } finally src.close()
+    val target = mutant.resolve("graft/streaming/Streaming.scala")
+    Files.writeString(target, Files.readString(target) +
+      "\nobject Mutant { val f = scala.concurrent.Future.unit }\n")
+    assert(concurrencyOffenders(mutant) === List(
+      "graft/streaming/Streaming.scala: 2"))
+  }
+
   test("filters and projections reach the parquet scan") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // q01: the shipdate predicate must appear in PushedFilters, not just

@@ -129,4 +129,83 @@ class PropertySpec extends AnyFunSuite {
       assert(bad === 0)
     }
   }
+  /** Reference admission over collected band rows: a doc is suppressed
+    * when any of its bands is in the store or shared with a lower-id
+    * batch doc; every batch row whose id is suppressed is dropped, and a
+    * doc with no band rows is admitted. */
+  private def admitReference(batchIds: Seq[Long],
+      probe: Seq[(Long, Int, String)],
+      store: Set[(Int, String)]): Seq[Long] = {
+    val byKey = probe.groupBy(r => (r._2, r._3))
+    val suppressed = probe.collect {
+      case (id, bi, bh) if store((bi, bh)) ||
+        byKey((bi, bh)).exists(_._1 < id) => id
+    }.toSet
+    batchIds.filterNot(suppressed).sorted
+  }
+
+  test("admitProbed matches a brute-force admission on random band tables") {
+    // few distinct band hashes so store hits and in-batch collisions
+    // are common; ids repeat (ties) and arrive unordered; some docs
+    // carry no band rows at all
+    val trial = for {
+      nDocs <- Gen.choose(1, 14)
+      ids <- Gen.listOfN(nDocs, Gen.choose(0L, 9L))
+      bandless <- Gen.listOfN(nDocs, Gen.choose(0, 4).map(_ == 0))
+      hashes <- Gen.listOfN(nDocs * 4, Gen.oneOf("a", "b", "c", "d", "e", "f"))
+      store <- Gen.listOfN(6, Gen.zip(Gen.choose(0, 3),
+        Gen.oneOf("a", "b", "c", "d", "e", "f", "g")))
+      nStore <- Gen.choose(0, 6)
+    } yield {
+      val probe = ids.zip(bandless).zipWithIndex.flatMap {
+        case ((_, true), _) => Nil
+        case ((id, false), d) =>
+          (0 until 4).map(b => (id, b, hashes(d * 4 + b)))
+      }
+      (ids, probe, store.take(nStore))
+    }
+    samples(trial, 24).foreach { case (ids, probe, store) =>
+      val batch = ids.zipWithIndex.map { case (id, i) => (id, s"doc$i") }
+        .toDF("doc_id", "text")
+      val probeDf = probe.map { case (id, bi, bh) => (id, s"t$id", bi, bh) }
+        .toDF("id", "text_hash", "band_idx", "band_hash")
+      val storeDf = store.zipWithIndex.map { case ((bi, bh), i) =>
+          (100L + i, "s", bi, bh) }
+        .toDF("id", "text_hash", "band_idx", "band_hash")
+      val got = Dedup.admitProbed(batch, "doc_id", probeDf, storeDf)
+        .select("doc_id").as[Long].collect().toSeq.sorted
+      assert(got === admitReference(ids, probe, store.toSet),
+        s"ids=$ids probe=$probe store=$store")
+    }
+  }
+
+  test("admitAgainstIndex matches a brute-force admission over its own " +
+      "band rows") {
+    // texts from a tiny vocabulary collide in whole bands; null texts
+    // have no band rows; the store is banded from other random texts
+    val text = Gen.listOfN(5, Gen.oneOf("red", "sea", "wind", "stone"))
+      .map(_.mkString(" "))
+    val trial = for {
+      nDocs <- Gen.choose(1, 10)
+      ids <- Gen.listOfN(nDocs, Gen.choose(0L, 6L))
+      texts <- Gen.listOfN(nDocs, Gen.frequency(5 -> text.map(Option(_)),
+        1 -> Gen.const(Option.empty[String])))
+      stored <- Gen.listOfN(3, text)
+    } yield (ids.zip(texts), stored)
+    samples(trial, 12).foreach { case (docs, stored) =>
+      val batch = docs.toDF("doc_id", "text")
+      val index = Dedup.minhashIndex(stored.zipWithIndex
+        .map { case (t, i) => (100L + i, t) }.toDF("doc_id", "text"),
+        "text", "doc_id")
+      val probe = Dedup.minhashIndex(batch, "text", "doc_id")
+        .select("id", "band_idx", "band_hash").as[(Long, Int, String)]
+        .collect().toSeq
+      val store = index.select("band_idx", "band_hash").as[(Int, String)]
+        .collect().toSet
+      val got = Dedup.admitAgainstIndex(batch, "text", "doc_id", index)
+        .select("doc_id").as[Long].collect().toSeq.sorted
+      assert(got === admitReference(docs.map(_._1), probe, store),
+        s"docs=$docs stored=$stored")
+    }
+  }
 }

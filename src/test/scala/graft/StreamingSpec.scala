@@ -2611,6 +2611,85 @@ class StreamingSpec extends SparkSpec {
       "doc_id", tmp, 1L, 0.0, 0.0, 1000.0, 8, 4, 3)
   }
 
+  test("curation micro-batch effects run concurrently under the lease: " +
+      "every job carries its batch id, a failing effect fails the " +
+      "batch only after its siblings join, no effect outlives the lease") {
+    import graft.streaming.ForkJoin
+    def effectThreads = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith(ForkJoin.ThreadPrefix))
+    // the helper alone: the failure surfaces only once the slow sibling
+    // has finished, and the sibling's own failure rides as suppressed
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      ForkJoin.all(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(300); slowDone.set(true) },
+        () => throw new IllegalArgumentException("second"))
+    }
+    assert(e.getMessage === "first" && slowDone.get())
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+    assert(effectThreads.isEmpty)
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fj").toString
+    val prose = Seq(
+      "the river rises slowly through the spring and floods the lower " +
+        "meadows before the first haying",
+      "glass furnaces along the coast burned driftwood and kelp ash to " +
+        "melt sand into pale green bottles",
+      "the survey marked every boundary stone and recorded the field " +
+        "names the parish had used for centuries",
+      "terraced vineyards stepped down the valley toward the slow bend " +
+        "of the river under a late sun")
+    val conf = spark.sparkContext.hadoopConfiguration
+    EffectAuditLockBackend.reset()
+    conf.set("graft.lease.backend", classOf[EffectAuditLockBackend].getName)
+    val in = MemoryStream[(Long, String)]
+    val q = Streaming.curationIngestSink(in.toDF().toDF("doc_id", "text"),
+      "text", "doc_id", tmp, s"$tmp/ckpt", minQuality = 0.0).start()
+    try {
+      // every job of a micro-batch, on the stream thread or an effect
+      // thread, is attributed to that batch
+      Seq(Seq(1L -> prose(0), 2L -> prose(1)),
+          Seq(3L -> prose(2), 4L -> (prose(0) + " again"))).zipWithIndex
+        .foreach { case (rows, batchId) =>
+          val (_, jobs) = jobsDuring {
+            in.addData(rows: _*); q.processAllAvailable()
+          }
+          assert(jobs.nonEmpty)
+          val ids = jobs.map(p =>
+            Option(p.getProperty("streaming.sql.batchId")))
+          assert(ids.forall(_.contains(batchId.toString)),
+            s"batch $batchId launched jobs attributed to ${ids.distinct}")
+        }
+      assert(Streaming.readCurationCorpus(spark, tmp).select("doc_id")
+        .as[Long].collect().toSet === Set(1L, 2L, 3L))
+    } finally q.stop()
+    try {
+      // a failing effect (the stats units guard rejects the changed
+      // length bounds) fails the batch, but only after the index and
+      // payload writes running beside it have committed
+      val err = intercept[IllegalArgumentException] {
+        Streaming.curationIngestBatch(Seq((5L, prose(3))).toDF("doc_id",
+          "text"), "text", "doc_id", tmp, 2L, 0.0, 0.0, 500.0, 8, 4, 3)
+      }
+      assert(err.getMessage.contains("length-bucket"))
+      Seq("index", "corpus").foreach { tree =>
+        assert(new java.io.File(s"$tmp/$tree/batch=2/_SUCCESS").exists,
+          s"$tree write had not joined when the batch failed")
+      }
+      assert(java.nio.file.Files.readString(
+          java.nio.file.Paths.get(s"$tmp/stats/_batch")).trim === "1",
+        "the failed batch folded its stats")
+      // and no effect thread was alive at any lease release
+      assert(EffectAuditLockBackend.releases.get() >= 3)
+      assert(EffectAuditLockBackend.liveAtRelease.isEmpty,
+        "effect threads alive when the lease was released: " +
+          EffectAuditLockBackend.liveAtRelease)
+      assert(effectThreads.isEmpty)
+    } finally conf.unset("graft.lease.backend")
+  }
+
   test("readCleanCorpus asOfSweep: historical clean views reconstruct " +
       "per sweep; deconAudit books each sweep's cost; a purge " +
       "truncates as-of fidelity as documented") {
@@ -3656,6 +3735,79 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(indexDir).drop("batch", "bh"))
       .select("doc_id").as[Long].collect().toSet
     assert(adm.select("doc_id").as[Long].collect().toSet === expect)
+  }
+
+  /** Properties of every Spark job started while `body` runs, on any
+    * thread: a marker job before and after `body` brackets the window
+    * in the listener bus's delivery order. */
+  private def jobsDuring[T](body: => T): (T, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobWindow"
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      java.util.Properties]()
+    val opened = new java.util.concurrent.CountDownLatch(1)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        Option(p.getProperty(key)) match {
+          case Some(v) if v == s"$id-open" => opened.countDown()
+          case Some(v) if v == s"$id-close" => closed.countDown()
+          case _ if opened.getCount == 0 && closed.getCount == 1 =>
+            seen.add(p)
+          case _ => ()
+        }
+      }
+    }
+    def marker(tag: String, latch: java.util.concurrent.CountDownLatch) = {
+      sc.setLocalProperty(key, s"$id-$tag")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(latch.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        s"listener never saw the $tag marker job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("open", opened)
+      val out = body
+      marker("close", closed)
+      (out, seen.toArray(Array.empty[java.util.Properties]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("mergeDedupIndexBatch: the standing-index read launches as many " +
+      "Spark jobs with 3 prior batches as with 1") {
+    // the touched-bucket leaves are the reader's root paths, so Spark
+    // lists them in one pass however many batch= dirs stand; a read of
+    // the index root would recurse into every batch dir and pay one
+    // listing job per prior batch (each dir's 64 bh= children exceed
+    // the parallel-discovery threshold)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text").orderBy("doc_id")
+      .as[(Long, String)].collect().toSeq
+    val slices = docs.grouped(100).toSeq.take(4)
+      .map(_.toDF("doc_id", "text"))
+    val (prior, probeBatch) = (slices.take(3), slices(3))
+    def jobsAfter(nPrior: Int): Int = {
+      val indexDir = java.nio.file.Files
+        .createTempDirectory("graft-list").toString + "/index"
+      prior.take(nPrior).zipWithIndex.foreach { case (b, i) =>
+        Streaming.mergeDedupIndexBatch(b, "text", "doc_id", indexDir, i.toLong)
+      }
+      val dirs = new java.io.File(indexDir).listFiles()
+        .count(_.getName.startsWith("batch="))
+      assert(dirs === nPrior)
+      jobsDuring(Streaming.mergeDedupIndexBatch(probeBatch, "text", "doc_id",
+        indexDir, nPrior.toLong))._2.size
+    }
+    val one = jobsAfter(1)
+    val three = jobsAfter(3)
+    assert(one > 0)
+    assert(three === one,
+      s"$three jobs with 3 prior batches vs $one with 1: listing grows " +
+        "with index age")
   }
 
   test("compactDedupIndex: identical admission/probe pre/post, fewer files") {
@@ -5316,6 +5468,38 @@ class FlatObjectStoreFs
     extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("s3a:///")
   override def getScheme: String = "s3a"
+}
+
+/** A [[graft.streaming.LockBackend]] that records, at every release,
+  * the effect threads ([[graft.streaming.ForkJoin]]) still alive —
+  * a release with one running would free the store under a write. */
+class EffectAuditLockBackend extends graft.streaming.LockBackend {
+  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
+      lock: HPath): Option[String] = {
+    val token = java.util.UUID.randomUUID().toString
+    try {
+      val out = fs.create(lock, false)
+      try out.write(token.getBytes("UTF-8")) finally out.close()
+      Some(token)
+    } catch { case _: java.io.IOException => None }
+  }
+  override def release(fs: org.apache.hadoop.fs.FileSystem,
+      lock: HPath, token: String): Unit = {
+    EffectAuditLockBackend.releases.incrementAndGet()
+    Thread.getAllStackTraces.keySet.forEach { t =>
+      if (t.isAlive &&
+          t.getName.startsWith(graft.streaming.ForkJoin.ThreadPrefix))
+        EffectAuditLockBackend.liveAtRelease.add(t.getName)
+    }
+    super.release(fs, lock, token)
+  }
+}
+
+object EffectAuditLockBackend {
+  val releases = new java.util.concurrent.atomic.AtomicInteger(0)
+  val liveAtRelease =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { releases.set(0); liveAtRelease.clear() }
 }
 
 /** A [[graft.streaming.LockBackend]] that counts its invocations —
